@@ -92,6 +92,7 @@ def one_pass(seen_n: int) -> dict:
     from zeno_spark.operators.admission import apply_admission
     from zeno_spark.operators.dedup import build_bloom_index, dedupe_against_seen
     from zeno_spark.operators.schedule import politeness_schedule, schedulable
+    from zeno_spark.plans.crawl import SEEN_BUCKETS
     from zeno_spark.session import get_spark
 
     spark = get_spark(
@@ -104,7 +105,7 @@ def one_pass(seen_n: int) -> dict:
     wh = tempfile.mkdtemp(prefix=f"seen_scale_{seen_n}_")
     seen_tbl = Catalog(spark, wh).table(
         "seen", schemas.SEEN,
-        bucket_spec=(cfg.seen_buckets, ("url_hash", "url")),
+        bucket_spec=(SEEN_BUCKETS, ("url_hash", "url")),
     )
     # several appends then a compaction — the steady state a long crawl
     # round actually reads

@@ -49,20 +49,17 @@ KEYED = T.StructType([
 ])
 
 
-@pytest.fixture(params=["parquet_standin", "duckdb_commitlog"])
+@pytest.fixture(params=["parquet_standin"])
 def backend(request, spark, tmp_path):
     """Factory: make(name, schema, bucket_spec=None) -> snapshot table.
 
     The param list is the certification registry — an Iceberg binding
-    adds itself here and must go green on the whole module.  Two
-    backends are certified today: the rename-published JSON manifest
-    log (HadoopCatalog shape) and the DuckDB transactional commit log
-    (JDBC-catalog shape) — proof the suite pins the SURFACE, not one
-    backend's mechanics."""
+    adds itself here and must go green on the whole module.  One backend
+    is certified today: the rename-published JSON manifest log
+    (HadoopCatalog shape).  The tests touch only the public surface, so
+    a second backend needs no test changes."""
     if request.param == "parquet_standin":
         cat = Catalog(spark, str(tmp_path / "wh"))
-    elif request.param == "duckdb_commitlog":
-        cat = Catalog(spark, str(tmp_path / "wh"), log_backend="duckdb")
     else:
         raise ValueError(request.param)
     return lambda name, schema, bucket_spec=None: cat.table(

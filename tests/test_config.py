@@ -4,12 +4,33 @@ viper semantics), plus the flat-YAML subset parser."""
 
 from __future__ import annotations
 
+import dataclasses
+import re
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
 
+from zeno_spark.config import CrawlConfig
 from zeno_spark.configfile import layered_defaults, parse_simple_yaml
+
+_PKG = Path(__file__).resolve().parents[1] / "zeno_spark"
+
+
+def test_every_crawl_config_field_is_read():
+    """A CrawlConfig field that no module reads is an option that changes
+    nothing.  Every field must be read somewhere in the package outside
+    config.py, as an attribute (``cfg.name``) or by quoted name."""
+    src = "\n".join(
+        p.read_text() for p in _PKG.rglob("*.py")
+        if p != _PKG / "config.py"
+    )
+    unread = [
+        f.name for f in dataclasses.fields(CrawlConfig)
+        if not re.search(rf"\.{f.name}\b|[\"']{f.name}[\"']", src)
+    ]
+    assert unread == []
 
 
 def test_yaml_subset_scalars_lists_comments(tmp_path):

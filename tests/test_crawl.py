@@ -304,6 +304,61 @@ def test_robots_scale_path_crawl_identical(spark, small_corpus, tmp_path):
     )
 
 
+def test_effective_robots_unions_static_cache_without_sitemaps(
+    spark, tmp_path
+):
+    """A user-supplied robots cache may lack the `sitemaps` column; the
+    gate input still unions it with the live-fetched table."""
+    from pyspark.sql import Row
+
+    from zeno_spark import schemas as S
+
+    static = spark.createDataFrame(
+        [("a.example", ["/private/"], None)],
+        "host string, disallow_prefixes array<string>, crawl_delay double",
+    )
+    job = CrawlJob(spark, str(tmp_path / "wh"), None, None, SMALL_CFG,
+                   robots=static)
+    job.robots_tbl.append(spark.createDataFrame(
+        [Row(host="b.example", disallow_prefixes=[], crawl_delay=None,
+             sitemaps=["http://b.example/sitemap.xml"])],
+        schema=S.ROBOTS,
+    ))
+    hosts = sorted(r.host for r in job._effective_robots().collect())
+    assert hosts == ["a.example", "b.example"]
+
+
+def test_admission_host_and_string_options_match_oracle(spark):
+    """F2-F4 (included_hosts, exclude_strings, include_strings) keep
+    exactly the rows the oracle's admission rule keeps."""
+    from zeno_spark.operators.admission import apply_admission
+    from zeno_spark.oracle import _admitted
+
+    cfg = CrawlConfig(
+        included_hosts=("a.example", "b.example"),
+        exclude_strings=("/private/", "?sid="),
+        include_strings=("/img/", "/page"),
+    )
+    rows = [
+        ("http://a.example/img/1.png", "a.example"),
+        ("http://a.example/page/2", "a.example"),
+        ("http://a.example/private/img/3.png", "a.example"),  # F3
+        ("http://c.example/img/4.png", "c.example"),          # F2
+        ("http://b.example/about", "b.example"),              # F4
+        ("https://b.example/page?sid=9", "b.example"),        # F3
+        ("ftp://a.example/img/5.png", "a.example"),           # F5
+        ("https://b.example/img/6.jpg", "b.example"),
+    ]
+    df = spark.createDataFrame(rows, "url string, host string")
+    got = sorted(r.url for r in apply_admission(df, cfg).collect())
+    want = sorted(u for u, h in rows if _admitted(u, h, cfg))
+    assert got == want == [
+        "http://a.example/img/1.png",
+        "http://a.example/page/2",
+        "https://b.example/img/6.jpg",
+    ]
+
+
 def test_fetched_file_count_bounded_over_long_crawl(
     spark, small_corpus, small_oracle, tmp_path
 ):

@@ -108,10 +108,8 @@ class SnapshotTable:
     def _put_manifest(self, version: int, manifest: dict) -> None:
         """Atomically publish ``manifest`` AS ``version`` (commit point).
         os.rename is the atomicity primitive here — the HadoopCatalog
-        shape; DuckLogSnapshotTable swaps it for a SQL transaction (the
-        JDBC-catalog shape).  Everything above this seam — commit
-        sequencing, snapshot reads, rollback, expiration folding — is
-        backend-agnostic and certified by tests/test_catalog_contract.py."""
+        shape; the snapshot surface built on it is certified by
+        tests/test_catalog_contract.py."""
         tmp = os.path.join(self.manifest_dir, f".tmp-{uuid.uuid4().hex}.json")
         with open(tmp, "w") as fh:
             json.dump(manifest, fh)
@@ -405,95 +403,12 @@ class SnapshotTable:
         return removed
 
 
-# one commit-log connection per warehouse (the driver-side catalog role:
-# every table in a warehouse shares the transactional metadata store,
-# exactly how an Iceberg JDBC catalog shares one database)
-_DUCK_CONNS: dict[str, object] = {}
-
-
-def _duck_conn(warehouse: str):
-    import duckdb
-
-    path = os.path.join(os.path.abspath(warehouse), "_commitlog.duckdb")
-    conn = _DUCK_CONNS.get(path)
-    if conn is None:
-        conn = duckdb.connect(path)
-        conn.execute(
-            "CREATE TABLE IF NOT EXISTS manifests ("
-            "  tbl VARCHAR NOT NULL,"
-            "  version BIGINT NOT NULL,"
-            "  body VARCHAR NOT NULL,"
-            "  PRIMARY KEY (tbl, version)"
-            ")"
-        )
-        _DUCK_CONNS[path] = conn
-    return conn
-
-
-class DuckLogSnapshotTable(SnapshotTable):
-    """SnapshotTable with the commit log in a transactional SQL store
-    (DuckDB) instead of rename-published JSON files.
-
-    This is the second certified backend in
-    tests/test_catalog_contract.py — the point is not DuckDB itself but
-    the demonstration that the crawl plan depends only on the snapshot
-    surface: data files and their layout (including the bucketed
-    storage-partitioned join) are IDENTICAL to the parquet stand-in;
-    only the four metadata primitives differ.  It is the sandbox
-    analogue of Iceberg's JDBC catalog (metadata pointer in a SQL row,
-    commit = one transaction) where the base class mirrors the
-    HadoopCatalog (metadata pointer published by atomic rename) — the
-    reference's WAL+recovery apparatus (queue/index/wal.go,
-    recovery.go:9-60) maps onto either."""
-
-    def _conn(self):
-        return _duck_conn(os.path.dirname(self.root))
-
-    def _manifest_versions(self) -> list[int]:
-        rows = self._conn().execute(
-            "SELECT version FROM manifests WHERE tbl = ? ORDER BY version",
-            [self.name],
-        ).fetchall()
-        return [r[0] for r in rows]
-
-    def _read_manifest(self, version: int) -> dict:
-        row = self._conn().execute(
-            "SELECT body FROM manifests WHERE tbl = ? AND version = ?",
-            [self.name, version],
-        ).fetchone()
-        if row is None:
-            raise FileNotFoundError(f"{self.name}@{version}")
-        return json.loads(row[0])
-
-    def _put_manifest(self, version: int, manifest: dict) -> None:
-        # INSERT OR REPLACE in one implicit transaction = the commit point
-        self._conn().execute(
-            "INSERT OR REPLACE INTO manifests VALUES (?, ?, ?)",
-            [self.name, version, json.dumps(manifest)],
-        )
-
-    def _delete_manifest(self, version: int) -> None:
-        self._conn().execute(
-            "DELETE FROM manifests WHERE tbl = ? AND version = ?",
-            [self.name, version],
-        )
-
-
 class Catalog:
-    """Namespace of SnapshotTables under one warehouse directory.
+    """Namespace of SnapshotTables under one warehouse directory."""
 
-    ``log_backend`` picks the commit-log mechanism: ``"files"`` (atomic
-    rename, default) or ``"duckdb"`` (transactional SQL store).  Both
-    share the data layout; both are certified by the backend
-    conformance contract (tests/test_catalog_contract.py)."""
-
-    def __init__(self, spark: SparkSession, warehouse: str,
-                 log_backend: str = "files"):
+    def __init__(self, spark: SparkSession, warehouse: str):
         self.spark = spark
         self.warehouse = warehouse
-        if log_backend not in ("files", "duckdb"):
-            raise ValueError(f"unknown log_backend: {log_backend!r}")
-        self.log_backend = log_backend
         os.makedirs(warehouse, exist_ok=True)
         self._tables: dict[str, SnapshotTable] = {}
 
@@ -502,9 +417,7 @@ class Catalog:
         bucket_spec: tuple[int, tuple[str, ...]] | None = None,
     ) -> SnapshotTable:
         if name not in self._tables:
-            cls = (DuckLogSnapshotTable if self.log_backend == "duckdb"
-                   else SnapshotTable)
-            self._tables[name] = cls(
+            self._tables[name] = SnapshotTable(
                 self.spark, self.warehouse, name, schema,
                 bucket_spec=bucket_spec,
             )

@@ -71,10 +71,6 @@ class CrawlConfig:
                                                # the bigger host_salt_buckets)
                                                # remains the primary skew kill.
 
-    # fetch routing (X4, capture.go:60-64, crawl/crawl.go:134-148)
-    proxy: str | None = None                   # proxied client when set
-    bypass_proxy_hosts: tuple[str, ...] = ()   # hosts fetched direct
-
     # retry / politeness (SURVEY §2.4)
     max_retry: int = 5                         # O5 (cmd/get.go:45)
     retry_backoff_rounds: int = 1              # O5: linear backoff, rounds not seconds
@@ -99,9 +95,6 @@ class CrawlConfig:
                                                # strategy — cmd/get_hq.go:55,
                                                # consumed hq.go:180): newest
                                                # enqueue_seq first
-    respect_crawl_delay: bool = True           # map robots Crawl-delay to a shrunk
-                                               # per-round budget (schedule.py); the
-                                               # reference has NO delay enforcement
     adaptive_politeness: bool = False          # feed the AIMD per-host budget
                                                # recommendations (streaming/
                                                # politeness.py control law, replayed
@@ -134,34 +127,8 @@ class CrawlConfig:
                                                # logical clock as streaming/live.py)
 
     # dedup
-    use_seencheck: bool = True                 # D1-D7
     bloom_prefilter: bool = False              # D9 — addition; prefilter only,
                                                # exactness stays with the anti-join
-    seen_buckets: int = 32                     # storage buckets of the `seen`
-                                               # table: bucket(N, (url_hash, url))
-                                               # layout makes the exact anti-join
-                                               # storage-partitioned (no per-round
-                                               # shuffle of the seen projection —
-                                               # catalog.py SnapshotTable).  Size N
-                                               # so one bucket's rows fit an
-                                               # executor's sort buffer at target
-                                               # scale (10^10 rows -> N ~ 2-4k on
-                                               # a real cluster); 0 disables the
-                                               # bucketed layout
-    bloom_buckets: int = 32                    # D9 bloom-index buckets.  SIZE TO
-                                               # SCALE: a bucket whose key count
-                                               # exceeds max_bits/bits_per_key
-                                               # (~1.3e7 keys at defaults) drops
-                                               # to the cuckoo overflow tier and
-                                               # gets rebuilt every merge — at
-                                               # 10^10 seen rows use ~1024 so
-                                               # buckets stay in the bloom tier.
-                                               # The built index records this
-                                               # value and refuses a mismatched
-                                               # probe/merge.
-    sitespecific_expand: bool = True           # §2.7 derived-capture rewrites
-                                               # (capture.go:213-315) as extra
-                                               # asset candidates per round
     payload_dedupe: bool = True                # D8 (crawl/crawl.go:96-99): identical
                                                # payloads >= threshold become revisit rows
     payload_dedupe_min_size: int = 1024        # WARC dedupe threshold (cmd/get.go:80-82)
@@ -184,12 +151,6 @@ class CrawlConfig:
     compact_file_trigger: int = 64             # live-file count above which a
                                                # state table is binpacked at
                                                # the next compaction cycle
-    fetched_target_file_bytes: int = 128 << 20 # small-file threshold of the
-                                               # fetched table's manifest-level
-                                               # binpack: payload files >= this
-                                               # are only ever RE-REFERENCED by
-                                               # new manifests, never rewritten
-                                               # (catalog.compact_small_files)
 
     # observability (internal/pkg/log analogue; operators/logfile.py)
     structured_log: bool = True                # per-round JSONL records under

@@ -60,6 +60,13 @@ _BLOOM_SCHEMA = (
 )
 _BLOOM_MERGE_SCHEMA = _BLOOM_SCHEMA + ", rebuild boolean"
 
+# D9 bloom-index buckets.  SIZE TO SCALE: a bucket whose key count
+# exceeds max_bits/bits_per_key (~1.3e7 keys at defaults) drops to the
+# cuckoo overflow tier and gets rebuilt every merge — at 10^10 seen rows
+# use ~1024 so buckets stay in the bloom tier.  The built index records
+# this value and refuses a mismatched probe/merge.
+BLOOM_BUCKETS = 32
+
 # ---------------------------------------------------------------------------
 # cuckoo overflow tier — kicks in when a bucket's key count would blow
 # the bloom size cap.  A cuckoo filter stores f-bit fingerprints in
@@ -74,8 +81,8 @@ _BLOOM_MERGE_SCHEMA = _BLOOM_SCHEMA + ", rebuild boolean"
 # The tier is a SAFETY NET, not the steady state: the cuckoo table is
 # batch-built, so merge_bloom_index flags an overflowed bucket for
 # rebuild on every delta.  If buckets sit in overflow permanently, the
-# index is undersized — raise cfg.bloom_buckets so each bucket's keys
-# fit max_bits/bits_per_key (the sizing rule in config.py).
+# index is undersized — raise BLOOM_BUCKETS so each bucket's keys fit
+# max_bits/bits_per_key (the sizing rule on the constant).
 # ---------------------------------------------------------------------------
 
 _CUCKOO_SLOTS = 4          # slots per bucket
@@ -249,7 +256,8 @@ def _build_one_filter(
 
 
 def build_bloom_index(
-    seen: DataFrame, n_buckets: int = 32, bits_per_key: int = 10, k: int = 4,
+    seen: DataFrame, n_buckets: int = BLOOM_BUCKETS, bits_per_key: int = 10,
+    k: int = 4,
     min_bits: int = 1 << 12, max_bits: int = 1 << 27, headroom: int = 1,
 ) -> DataFrame:
     """One filter per url_hash bucket, built distributed.  Returns a
@@ -272,7 +280,7 @@ def build_bloom_index(
 
 
 def merge_bloom_index(
-    old_index: DataFrame, delta: DataFrame, n_buckets: int = 32,
+    old_index: DataFrame, delta: DataFrame, n_buckets: int = BLOOM_BUCKETS,
     bits_per_key: int = 10, k: int = 4,
     min_bits: int = 1 << 12, max_bits: int = 1 << 27, headroom: int = 2,
 ) -> DataFrame:
@@ -343,7 +351,8 @@ def merge_bloom_index(
 
 
 def bloom_prefilter(
-    candidates: DataFrame, bloom_index: DataFrame, n_buckets: int = 32
+    candidates: DataFrame, bloom_index: DataFrame,
+    n_buckets: int = BLOOM_BUCKETS,
 ) -> DataFrame:
     """Tag candidates with `maybe_seen` by cogrouping with the per-bucket
     blooms on the same bucket key (co-partitioned — each task tests its
@@ -410,7 +419,7 @@ def dedupe_against_seen(
     candidates: DataFrame,
     seen: DataFrame,
     use_bloom: bool = False,
-    n_buckets: int = 32,
+    n_buckets: int = BLOOM_BUCKETS,
     bloom_index: DataFrame | None = None,
 ) -> DataFrame:
     """The full D1 check: optional bloom prefilter, then exact anti-join.

@@ -178,32 +178,6 @@ def proxy_for_host(host: str, proxy: str | None, bypass: tuple[str, ...]) -> str
     return proxy
 
 
-def _proxy_col(cfg) -> F.Column:
-    """X4 as a native column (no dataflow impact; a real worker picks
-    the connection per batch from this column)."""
-    if cfg is not None and getattr(cfg, "proxy", None):
-        bypass = (
-            F.col("host").isin(*cfg.bypass_proxy_hosts)
-            if cfg.bypass_proxy_hosts
-            else F.lit(False)
-        )
-        return F.when(bypass, F.lit(None).cast("string")).otherwise(F.lit(cfg.proxy))
-    return F.lit(None).cast("string")
-
-
-def _headers_col(cfg) -> F.Column:
-    """§2.7 request decoration (capture.go:213-238: tiktok / vk
-    browser-mimic headers, reddit consent cookies) as a native per-row
-    map column — the real worker sends these with the request; the
-    sandbox worker has no wire to put them on, so the column is
-    dropped before the verify stage like ``__proxy``."""
-    if cfg is not None and getattr(cfg, "sitespecific_expand", False):
-        from zeno_spark.operators.sitespecific import request_headers_col
-
-        return request_headers_col("url")
-    return F.lit(None).cast("map<string,string>")
-
-
 def fetch_meta(
     scheduled: DataFrame, pages: DataFrame | None, cfg=None, transport=None
 ) -> DataFrame:
@@ -287,12 +261,8 @@ def fetch_meta(
         F.col("__retry_after").alias("retry_after"),
         F.col("__bytes"),
         F.col("__adv_phash"),
-        _proxy_col(cfg).alias("__proxy"),
-        _headers_col(cfg).alias("__headers"),
     )
-    verified = base.drop("__proxy", "__headers").mapInArrow(
-        _verify_batches, schema=FETCH_META
-    )
+    verified = base.mapInArrow(_verify_batches, schema=FETCH_META)
     if transport.covers_all:
         # a live transport yields one response row per scheduled row
         # (connection failure is a status, not an absent row)

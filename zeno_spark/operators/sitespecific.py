@@ -13,8 +13,8 @@ time (capture.go:213-315) and post-response (capture.go:396-416,
      functions -> whole-stage codegen, zero Python.
   2. ``request_headers_col()`` — a native when-chain producing the
      per-row header map the fetch worker would send (tiktok / vk
-     browser-mimic headers, reddit consent/over18 cookies).  The
-     sandbox fetch records it; a real deployment passes it to the HTTP
+     browser-mimic headers, reddit consent/over18 cookies).  No fetch
+     path sends it yet; a real deployment passes it to the HTTP
      client.
   3. the reddit post-API JSON extractor (called from
      parse.route_extract) — permalinks as outlinks + payload URL walk

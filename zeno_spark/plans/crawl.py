@@ -65,6 +65,13 @@ _TABLES = (
     "robots_tbl", "budgets_tbl", "hostrank_tbl", "hostedges_tbl",
 )
 
+# storage buckets of the `seen` table: the bucket(N, (url_hash, url))
+# layout makes the exact anti-join storage-partitioned (no per-round
+# shuffle of the seen projection — catalog.py SnapshotTable).  Size N so
+# one bucket's rows fit an executor's sort buffer at target scale
+# (10^10 rows -> N ~ 2-4k on a real cluster).
+SEEN_BUCKETS = 32
+
 
 def seed_lines(spark: SparkSession, path: str) -> DataFrame:
     """S1 — see seed_lines_with_total; the DataFrame-only form."""
@@ -181,11 +188,7 @@ class CrawlJob:
         # the seen projection (the documented 10^10-row scale fix in
         # operators/dedup.py; guarded by tests/test_planshape.py)
         self.seen = self.catalog.table(
-            "seen", schemas.SEEN,
-            bucket_spec=(
-                (cfg.seen_buckets, ("url_hash", "url"))
-                if cfg.seen_buckets else None
-            ),
+            "seen", schemas.SEEN, bucket_spec=(SEEN_BUCKETS, ("url_hash", "url")),
         )
         self.claimed = self.catalog.table("claimed", schemas.CLAIMED)
         self.fetched = self.catalog.table("fetched", schemas.FETCHED)
@@ -358,10 +361,10 @@ class CrawlJob:
         )
         items = apply_admission(items, self.cfg)
         items = dedup.in_batch_dedupe(items)
-        new = dedup.dedupe_against_seen(
-            items, self.seen.read(), use_bloom=self.cfg.bloom_prefilter,
-            n_buckets=self.cfg.bloom_buckets,
-        ).cache()
+        # `seen` is empty here (recover() rolled every table back to
+        # version 0): the exact anti-join against it is already cheap,
+        # and a bloom index over it would only add Spark jobs
+        new = dedup.dedupe_against_seen(items, self.seen.read()).cache()
         n = new.count()  # materializes the cache (incl. first UDF worker
         # spin-up) so the two appends below only re-scan it — they are
         # independent writes, submitted concurrently like the round's
@@ -537,10 +540,7 @@ class CrawlJob:
             return None
         if self.bloom.current_version() == 0:
             self.bloom.rewrite(
-                dedup.build_bloom_index(
-                    self.seen.read(), n_buckets=self.cfg.bloom_buckets,
-                    headroom=2,
-                )
+                dedup.build_bloom_index(self.seen.read(), headroom=2)
             )
         return self.bloom.read()
 
@@ -553,8 +553,7 @@ class CrawlJob:
         the round marker: a crash in between rolls bloom and seen back
         together, preserving the superset invariant."""
         merged = dedup.merge_bloom_index(
-            self.bloom.read(), new_hashes.select("url_hash"),
-            n_buckets=self.cfg.bloom_buckets,
+            self.bloom.read(), new_hashes.select("url_hash")
         ).cache()
         flagged = [
             r.bucket
@@ -564,11 +563,8 @@ class CrawlJob:
         if flagged:
             rebuilt = dedup.build_bloom_index(
                 self.seen.read().filter(
-                    dedup.bucket_of(
-                        "url_hash", self.cfg.bloom_buckets
-                    ).isin(flagged)
+                    dedup.bucket_of("url_hash", dedup.BLOOM_BUCKETS).isin(flagged)
                 ),
-                n_buckets=self.cfg.bloom_buckets,
                 headroom=2,
             )
             keep = keep.unionByName(rebuilt)
@@ -612,12 +608,7 @@ class CrawlJob:
                 broadcast=robots_bcast,
                 salt_buckets=max(1, cfg.robots_salt_buckets),
             )
-        delays = (
-            robots_cache
-            if cfg.robots and cfg.respect_crawl_delay
-            and robots_cache is not None
-            else None
-        )
+        delays = robots_cache if cfg.robots else None
         sched = politeness_schedule(
             gated, cfg, delays=delays, budgets=self._adaptive_budgets(),
             round_no=round_no, broadcast_delays=robots_bcast,
@@ -681,11 +672,10 @@ class CrawlJob:
             ok_html = ok.filter(F.col("content_type") == "text/html")
             cand = extract_candidates(ok_html, self.links, cfg, round_no)
         cand = cand.unionByName(redirect_candidates(redirects, cfg, round_no))
-        if cfg.sitespecific_expand:
-            # §2.7 derived captures (API/embed/CDN rewrites) join the
-            # same candidate pipeline; a no-op on corpora without the
-            # matching hosts (native when-chain expands to empty)
-            cand = cand.unionByName(sitespecific_candidates(ok, cfg, round_no))
+        # §2.7 derived captures (API/embed/CDN rewrites) join the same
+        # candidate pipeline; a no-op on corpora without the matching
+        # hosts (native when-chain expands to empty)
+        cand = cand.unionByName(sitespecific_candidates(ok, cfg, round_no))
         if sitemap_cand is not None:
             # robots-discovered sitemap URLs enter the SAME dedup +
             # frontier path as every other candidate
@@ -696,7 +686,7 @@ class CrawlJob:
         new = self._rank_boost(
             dedup.dedupe_against_seen(
                 in_batch, self.seen.read(), use_bloom=cfg.bloom_prefilter,
-                n_buckets=cfg.bloom_buckets, bloom_index=self._bloom_index(),
+                bloom_index=self._bloom_index(),
             )
         ).cache()
 
@@ -908,7 +898,8 @@ class CrawlJob:
             return live
         if live is None:
             return self.robots
-        return self.robots.unionByName(live)
+        # a user-supplied cache may predate the `sitemaps` column
+        return self.robots.unionByName(live, allowMissingColumns=True)
 
     def _refresh_robots(self, admitted: DataFrame,
                         round_no: int) -> DataFrame | None:
@@ -1011,9 +1002,7 @@ class CrawlJob:
         # bytes untouched), only the sub-target tail streams through a
         # narrow scan->write (catalog.compact_small_files docstring)
         if self.fetched.file_count() > self.cfg.compact_file_trigger:
-            self.fetched.compact_small_files(
-                target_bytes=self.cfg.fetched_target_file_bytes
-            )
+            self.fetched.compact_small_files()
         for t in _TABLES:
             getattr(self, t).expire_snapshots(keep_last=16)
 
