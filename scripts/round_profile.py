@@ -46,8 +46,8 @@ def profile(cores: int, sf: float = 0.1) -> dict:
     job = CrawlJob(spark, warehouse, pages, links, cfg)
 
     # wrap the per-table appends + bloom/marker internals with wall
-    # timers so the state_commit/sink_commit blocks decompose (threads
-    # overlap, so these are per-call walls, not additive)
+    # timers so the state_commit/sink_commit blocks decompose (the
+    # commits run one after another, so the walls add up to each block)
     sub: dict[str, list] = {}
 
     def wrap(obj, attr, name):

@@ -8,6 +8,8 @@ North-rule invariants checked:
   * per-row content invariant — decoded pixels exact (png) / PSNR>=40dB
     (lossy stub) + caption byte-equality vs the deterministic generator
   * resumability — kill after round k, recover, finish: identical state
+  * every commit of a round runs on the calling thread, in a fixed order,
+    before the round marker
   * bloom tier + salting change nothing end-to-end
 
 One full t1 crawl is shared across assertions (they're read-only); the
@@ -16,10 +18,14 @@ resume and bloom runs use a smaller corpus to keep the suite fast.
 
 from __future__ import annotations
 
+import threading
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
 from zeno_spark import fixtures
+from zeno_spark.catalog import SnapshotTable
 from zeno_spark.config import CrawlConfig
 from zeno_spark.fixtures import build_metadata, caption_for
 from zeno_spark.functions.images import decode_image, generate_pixels, psnr
@@ -72,11 +78,44 @@ def small_oracle(small_corpus):
     )
 
 
+@contextmanager
+def _recording_commits(job, log):
+    """Append (table name or "marker", ran on the main thread) to `log`
+    after every table append/rewrite and every marker write `job` makes."""
+    def record(obj, attr, name):
+        fn = getattr(obj, attr)
+
+        def logged(*a, **kw):
+            out = fn(*a, **kw)
+            log.append((name, threading.current_thread() is threading.main_thread()))
+            return out
+
+        setattr(obj, attr, logged)
+
+    tables = [t for t in vars(job).values() if isinstance(t, SnapshotTable)]
+    for tbl in tables:
+        record(tbl, "append", tbl.name)
+        record(tbl, "rewrite", tbl.name)
+    record(job, "_write_marker", "marker")
+    try:
+        yield
+    finally:
+        for tbl in tables:
+            del tbl.append, tbl.rewrite
+        del job._write_marker
+
+
 @pytest.fixture(scope="module")
-def full_run(spark, corpus, tmp_path_factory):
+def commit_log():
+    return []
+
+
+@pytest.fixture(scope="module")
+def full_run(spark, corpus, tmp_path_factory, commit_log):
     wh = tmp_path_factory.mktemp("wh_full")
     job = CrawlJob(spark, str(wh), corpus["dfs"]["pages"], corpus["dfs"]["links"], CFG)
-    stats = job.run(seeds=corpus["dfs"]["seeds"], max_rounds=CFG.max_rounds)
+    with _recording_commits(job, commit_log):
+        stats = job.run(seeds=corpus["dfs"]["seeds"], max_rounds=CFG.max_rounds)
     return job, stats
 
 
@@ -140,6 +179,29 @@ def test_metrics_lineage(full_run):
             assert agg[s.round] == s.scheduled
 
 
+def test_round_commits_run_in_order_on_the_main_thread(full_run, commit_log):
+    """Seed commits frontier then seen; each round commits fetched <
+    seen < frontier < claimed < metrics, all on the calling thread,
+    and nothing commits after the last marker."""
+    _, stats = full_run
+    assert commit_log and all(main for _, main in commit_log), commit_log
+    segments, cur = [], []
+    for name, _ in commit_log:
+        if name == "marker":
+            segments.append(cur)
+            cur = []
+        else:
+            cur.append(name)
+    assert cur == []
+    seed, rounds = segments[0], segments[1:]
+    assert seed == ["frontier", "seen"]
+    assert len(rounds) == len(stats)
+    order = ("fetched", "seen", "frontier", "claimed", "metrics")
+    for r, names in enumerate(rounds):
+        first = [names.index(t) for t in order]
+        assert first == sorted(first), f"round {r}: {names}"
+
+
 def test_crawl_ordering_matches_oracle(spark, small_corpus, small_oracle, tmp_path):
     """Within-host FIFO order, round by round, vs the oracle."""
     from pyspark.sql import Window
@@ -170,9 +232,11 @@ def test_crawl_ordering_matches_oracle(spark, small_corpus, small_oracle, tmp_pa
         job.run_round(rnd)
 
 
-def test_resume_from_checkpoint(spark, small_corpus, small_oracle, tmp_path):
-    """O12: run 2 rounds, 'crash' with partial round-2 commits, re-open,
-    finish — identical final state; the partial commits roll back."""
+def test_resume_from_checkpoint(spark, small_corpus, small_oracle, tmp_path,
+                                monkeypatch):
+    """O12: run 2 rounds, crash round 2 at its claimed commit, add more
+    partial commits, re-open, finish — identical final state; the
+    partial commits roll back."""
     wh = tmp_path / "wh_res"
     job = CrawlJob(
         spark, str(wh), small_corpus["dfs"]["pages"], small_corpus["dfs"]["links"], SMALL_CFG
@@ -180,7 +244,23 @@ def test_resume_from_checkpoint(spark, small_corpus, small_oracle, tmp_path):
     job.seed(small_corpus["dfs"]["seeds"])
     for rnd in range(2):
         job.run_round(rnd)
-    # crash mid-round-2: partial table commits, no round marker
+    before = job._versions()
+
+    def crash(df):
+        raise RuntimeError("crash at the claimed commit")
+
+    monkeypatch.setattr(job.claimed, "append", crash)
+    with pytest.raises(RuntimeError, match="claimed commit"):
+        job.run_round(2)
+    after = job._versions()
+    # fetched, seen and frontier committed for round 2; nothing after
+    # the failed claimed append did, and no round marker was written
+    for t in ("fetched", "seen", "frontier"):
+        assert after[t] > before[t], t
+    for t in ("claimed", "metrics"):
+        assert after[t] == before[t], t
+    assert job.last_committed_round() == 1
+    # more partial table commits by hand, still no round marker
     job.fetched.append(job.fetched.read().limit(3))
     job.seen.append(
         spark.createDataFrame([(1, "http://junk/", "seed", 3)], job.seen.schema)

@@ -9,8 +9,10 @@ rounds over snapshot-committed tables (SURVEY §3.4):
     R    = fetch(S): Arrow-batched fetch/verify workers       -- X1-X3
     new  = extract(R) ∪ redirects(R) -> canonicalize -> in-batch dedupe
            -> [bloom prefilter] -> anti-join seen            -- P*, D1-D9
-    commit: fetched += R.ok; seen += new; frontier += new ∪ retries;
-            claimed += S; metrics += counters; round marker (atomic)
+    commit, in order on the calling thread: fetched += R.ok;
+            seen += new; [bloom += new]; frontier += new ∪ retries;
+            claimed += S; metrics += counters; [budgets];
+            [hostedges, hostrank]; [compaction]; round marker (atomic)
 
 Lifecycle parity:
   * O10 termination: stop when the pending frontier is empty (finish.go:12-24)
@@ -300,21 +302,18 @@ class CrawlJob:
         manifests removed) and the round re-runs idempotently."""
         last = self.last_committed_round()
         if last >= 0:
-            with open(os.path.join(self.state_dir, f"{last:06d}.json")) as fh:
-                marker = json.load(fh)
-            for t in _TABLES:
-                getattr(self, t).rollback_to(marker["versions"].get(t, 0))
-            return last + 1
-        seeded = os.path.join(self.state_dir, "seeded.json")
-        if os.path.exists(seeded):
-            with open(seeded) as fh:
-                marker = json.load(fh)
-            for t in _TABLES:
-                getattr(self, t).rollback_to(marker["versions"].get(t, 0))
-            return 0
+            marker, nxt = f"{last:06d}.json", last + 1
+        elif os.path.exists(os.path.join(self.state_dir, "seeded.json")):
+            marker, nxt = "seeded.json", 0
+        else:
+            marker, nxt = None, -1
+        versions = {}
+        if marker is not None:
+            with open(os.path.join(self.state_dir, marker)) as fh:
+                versions = json.load(fh)["versions"]
         for t in _TABLES:
-            getattr(self, t).rollback_to(0)
-        return -1
+            getattr(self, t).rollback_to(versions.get(t, 0))
+        return nxt
 
     # ------------------------------------------------------------------
     # seeding (S1/S2 + D2)
@@ -366,19 +365,11 @@ class CrawlJob:
         # and a bloom index over it would only add Spark jobs
         new = dedup.dedupe_against_seen(items, self.seen.read()).cache()
         n = new.count()  # materializes the cache (incl. first UDF worker
-        # spin-up) so the two appends below only re-scan it — they are
-        # independent writes, submitted concurrently like the round's
-        # commit pools
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fa = pool.submit(self.frontier.append, new)
-            sa = pool.submit(
-                self.seen.append,
-                new.select("url_hash", "url", "type", F.lit(0).alias("round")),
-            )
-            fa.result()
-            sa.result()
+        # spin-up) so the two appends below only re-scan it
+        self.frontier.append(new)
+        self.seen.append(
+            new.select("url_hash", "url", "type", F.lit(0).alias("round"))
+        )
         new.unpersist()
         self._write_marker("seeded.json", {"versions": self._versions(), "seeds": n})
         self._log("seeded", urls=n)
@@ -757,19 +748,13 @@ class CrawlJob:
 
         # ---- round commits (atomic marker last) ----
         # results.count() above already filled the sched+results caches;
-        # seen.append fills cand+new.  The remaining appends only
-        # re-scan caches, so they submit CONCURRENTLY from driver
-        # threads — Spark schedules them in parallel, hiding their fixed
-        # job latency.  Atomicity is unaffected: each table commits
-        # independently and the round marker (below) is still the only
-        # commit point recovery trusts.
-        from concurrent.futures import ThreadPoolExecutor
-
-        # the payload sink pass and the extract/dedupe pass share only
-        # the warm narrow `results` cache, so they overlap: the sink is
-        # scan->write IO-shaped, extract is CPU-shaped — concurrent
-        # submission hides one behind the other at >1 task slot
-        def _seen_then_bloom():
+        # seen.append fills cand+new.  Every commit runs on this thread,
+        # in this order: fetched, seen, bloom, frontier, claimed,
+        # metrics, budgets, then hostedges/hostrank and compaction.  Each
+        # table commits independently; the round marker (below) is the
+        # only commit point recovery trusts.
+        with timer.stage("sink_commit"):
+            self.fetched.append(fetched_rows)
             self.seen.append(
                 new.select(
                     "url_hash", "url", "type", F.lit(round_no + 1).alias("round")
@@ -777,38 +762,21 @@ class CrawlJob:
             )
             if cfg.bloom_prefilter:
                 # incremental D9 maintenance (no full seen rescan):
-                # chained directly after the seen append (rebuilds read
-                # the post-append table, the merge reads the now-warm
-                # `new` cache) so its latency hides behind the payload
-                # sink's tail instead of contending with the metrics agg
-                # in the state pool; still precedes the round marker
-                # (rollback consistency)
+                # rebuilds read the post-append table, the merge reads
+                # the warm `new` cache
                 self._update_bloom(new)
-
-        with timer.stage("sink_commit"), ThreadPoolExecutor(max_workers=2) as pool:
-            fa = pool.submit(self.fetched.append, fetched_rows)
-            sa = pool.submit(_seen_then_bloom)
-            fa.result()
-            sa.result()
-        with timer.stage("state_commit"), ThreadPoolExecutor(max_workers=4) as pool:
-            futs = [
-                pool.submit(self.frontier.append, new.unionByName(retries)),
-                pool.submit(
-                    self.claimed.append,
-                    sched.select(
-                        _claim_key().alias("id"), F.lit(round_no).alias("round")
-                    ),
-                ),
-                pool.submit(self.metrics.append, metric_rows),
-            ]
+        with timer.stage("state_commit"):
+            self.frontier.append(new.unionByName(retries))
+            self.claimed.append(
+                sched.select(
+                    _claim_key().alias("id"), F.lit(round_no).alias("round")
+                )
+            )
+            self.metrics.append(metric_rows)
             if cfg.adaptive_politeness:
                 # incremental AIMD fold (reads only the cached
-                # metric_rows + the state table); same commit scope
-                futs.append(
-                    pool.submit(self._update_budgets, metric_rows, round_no)
-                )
-            for f in futs:
-                f.result()
+                # metric_rows + the state table)
+                self._update_budgets(metric_rows, round_no)
         # round totals from the (cached) per-host lineage — one small agg
         # instead of a count() job per intermediate
         with timer.stage("totals"):
