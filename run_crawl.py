@@ -71,17 +71,6 @@ def main() -> None:
                     help="within-host dequeue order (the reference's "
                          "--hq-strategy, cmd/get_hq.go:55)")
     ap.add_argument("--robots", action="store_true")
-    ap.add_argument("--robots-broadcast-max-hosts", type=int,
-                    default=1_000_000,
-                    help="force-broadcast the robots cache into the F10 "
-                         "gate only while its host count stays under "
-                         "this; above it the gate uses a salted shuffle "
-                         "join (0 = never force broadcast)")
-    ap.add_argument("--robots-salt-buckets", type=int, default=4,
-                    help="salt factor of the F10 scale-path shuffle join; "
-                         "rules-side shuffle bytes scale linearly with it "
-                         "(cost bound in config.py), so it is deliberately "
-                         "smaller than --salt-buckets")
     ap.add_argument("--live-robots", action="store_true",
                     help="with --live: fetch+parse each host's "
                          "/robots.txt through the transport (F10 live "
@@ -219,8 +208,6 @@ def main() -> None:
         bloom_prefilter=args.bloom,
         robots=args.robots or args.live_robots,
         live_robots=args.live_robots,
-        robots_broadcast_max_hosts=args.robots_broadcast_max_hosts,
-        robots_salt_buckets=args.robots_salt_buckets,
         max_rounds=args.rounds,
         schedule_strategy=args.strategy,
         adaptive_politeness=args.adaptive_politeness,

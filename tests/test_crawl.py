@@ -250,8 +250,11 @@ def test_resume_from_checkpoint(spark, small_corpus, small_oracle, tmp_path,
         raise RuntimeError("crash at the claimed commit")
 
     monkeypatch.setattr(job.claimed, "append", crash)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs().size()
     with pytest.raises(RuntimeError, match="claimed commit"):
         job.run_round(2)
+    # the failed round released every intermediate it cached
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persistent
     after = job._versions()
     # fetched, seen and frontier committed for round 2; nothing after
     # the failed claimed append did, and no round marker was written
@@ -331,57 +334,6 @@ def test_bloom_and_salt_change_nothing(spark, small_corpus, small_oracle, tmp_pa
     seen, fetched = _state(job)
     assert seen == small_oracle.seen
     assert fetched == set(small_oracle.fetched)
-
-
-def test_robots_scale_path_crawl_identical(spark, small_corpus, tmp_path):
-    """run_round's join-strategy decision (cfg.robots_broadcast_max_hosts)
-    must be invisible to results: a crawl forced onto the scale path
-    (threshold 0 — salted shuffle gate join, no delays broadcast hint)
-    produces the identical fetched set, seen set, and round stats as the
-    default broadcast fast path, with a robots table carrying both a
-    disallow rule and a Crawl-delay so every consumer of the decision is
-    exercised."""
-    from pyspark.sql import Row
-
-    from zeno_spark import schemas as S
-
-    hosts = sorted(
-        r.host
-        for r in small_corpus["dfs"]["pages"].select("host").distinct().collect()
-    )
-    robots_df = spark.createDataFrame(
-        [Row(host=hosts[0], disallow_prefixes=["/img/"], crawl_delay=None,
-             sitemaps=[]),
-         Row(host=hosts[1], disallow_prefixes=[], crawl_delay=30.0,
-             sitemaps=[])],
-        schema=S.ROBOTS,
-    )
-    runs = {}
-    for name, threshold in (("fast", 1_000_000), ("scale", 0)):
-        cfg = CrawlConfig(
-            max_hops=2, per_host_budget=8, max_rounds=8, compact_every=3,
-            host_salt_buckets=4, robots=True,
-            robots_broadcast_max_hosts=threshold,
-        )
-        job = CrawlJob(
-            spark, str(tmp_path / f"wh_rb_{name}"),
-            small_corpus["dfs"]["pages"], small_corpus["dfs"]["links"],
-            cfg, robots=robots_df,
-        )
-        stats = job.run(
-            seeds=small_corpus["dfs"]["seeds"], max_rounds=cfg.max_rounds
-        )
-        runs[name] = (
-            [s.__dict__ for s in stats],
-            {(r.url, r.round, r.status) for r in job.fetched.read().collect()},
-            {(r.url, r.type) for r in job.seen.read().collect()},
-        )
-    assert runs["fast"] == runs["scale"]
-    # the gate gated in both runs
-    blocked_prefix = f"http://{hosts[0]}/img/"
-    assert not any(
-        u.startswith(blocked_prefix) for (u, _, _) in runs["fast"][1]
-    )
 
 
 def test_effective_robots_unions_static_cache_without_sitemaps(
@@ -613,7 +565,7 @@ def test_fetch_missing_origin_is_native_404(spark):
     """A scheduled URL with no origin row surfaces as a 404 result row
     (connection-refused analogue) without entering the fetch worker."""
     from zeno_spark import schemas
-    from zeno_spark.operators.fetch import fetch
+    from zeno_spark.operators.fetch import fetch_meta
 
     sched = spark.createDataFrame(
         [("i1", "http://h1.example/ok", 1, "h1.example", None, 0, "seed",
@@ -632,10 +584,10 @@ def test_fetch_missing_origin_is_native_404(spark):
          "redirect_to": [None]}
     )
     pages = attach_payloads(spark, pages_meta)
-    got = {r.url: r for r in fetch(sched, pages).collect()}
+    got = {r.url: r for r in fetch_meta(sched, pages).collect()}
     assert got["http://h1.example/ok"].status == 200
     assert got["http://gone.example/x"].status == 404
-    assert got["http://gone.example/x"].bytes is None
+    assert got["http://gone.example/x"].payload_size is None
 
 
 def test_stats_api(full_run):
@@ -726,13 +678,13 @@ def test_metadata_record_write(full_run):
 
 
 def test_seed_lines_native_exact(spark, tmp_path):
-    """seed_lines assigns EXACT file line numbers natively — equal to
-    the RDD zipWithIndex numbering it replaced — across many file
-    splits, and the seed path contains no .rdd round-trip."""
+    """seed_lines_with_total assigns EXACT file line numbers natively —
+    equal to the RDD zipWithIndex numbering it replaced — across many
+    file splits, and the seed path contains no .rdd round-trip."""
     import inspect
 
     from zeno_spark.plans import crawl as crawl_mod
-    from zeno_spark.plans.crawl import seed_lines, seed_lines_with_total
+    from zeno_spark.plans.crawl import seed_lines_with_total
 
     path = str(tmp_path / "seeds.txt")
     with open(path, "w") as fh:
@@ -755,7 +707,7 @@ def test_seed_lines_native_exact(spark, tmp_path):
     assert total == 4000
     # the production seed path must stay RDD-free
     assert ".rdd" not in inspect.getsource(crawl_mod.CrawlJob.seed)
-    assert ".rdd" not in inspect.getsource(seed_lines)
+    assert ".rdd" not in inspect.getsource(seed_lines_with_total)
 
 
 def test_seed_requires_line_column(spark, small_corpus, tmp_path):

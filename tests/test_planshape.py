@@ -194,14 +194,15 @@ def test_bucketed_seen_join_shape_in_crawl(spark, tmp_path):
     assert "Exchange" not in right
 
 
-def test_robots_gate_scale_path_drops_the_forced_broadcast(spark):
-    """The robots cache grows with every host a wide crawl ever meets;
-    at 10^8 hosts its disallow arrays are tens of GB and a per-round
-    forced broadcast is an executor OOM.  broadcast=False (selected by
-    cfg.robots_broadcast_max_hosts from free catalog row counts) must
-    leave NO broadcast hint — with the planner's own broadcasting
-    disabled the gate plans a salted equi shuffle join, never a
-    nested-loop — while the default fast path still broadcasts."""
+def test_robots_gate_scale_path_drops_the_forced_broadcast(spark, tmp_path):
+    """The robots cache grows with every host a wide crawl ever meets, so
+    the gate's join carries no broadcast hint and Spark's planner picks
+    the strategy from the cache's size: at the session threshold the
+    small cache broadcasts, and with the planner's broadcasting disabled
+    (a cache past the threshold) the gate plans a salted equi shuffle
+    join, never a nested-loop join or a cartesian product.  The cache is
+    a parquet scan, like the crawl's robots table, so the planner knows
+    its size."""
     from pyspark.sql import functions as F
 
     from zeno_spark import schemas
@@ -211,24 +212,22 @@ def test_robots_gate_scale_path_drops_the_forced_broadcast(spark):
         F.concat(F.lit("http://h"), F.col("id") % 7, F.lit(".com/p"),
                  F.col("id")).alias("url"),
         F.concat(F.lit("h"), F.col("id") % 7, F.lit(".com")).alias("host"),
-        F.xxhash64(F.col("id").cast("string")).alias("url_hash"),
     )
-    robots = spark.createDataFrame(
+    spark.createDataFrame(
         [("h1.com", ["/p1"], None, [])], schema=schemas.ROBOTS
-    )
+    ).write.parquet(str(tmp_path / "robots"))
+    robots = spark.read.parquet(str(tmp_path / "robots"))
+    small = _plan(apply_robots_gate(cand, robots))
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        scale = _plan(
-            apply_robots_gate(cand, robots, broadcast=False, salt_buckets=4)
-        )
-        fast = _plan(apply_robots_gate(cand, robots, broadcast=True))
+        large = _plan(apply_robots_gate(cand, robots))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert "BroadcastExchange" not in scale
-    assert "BroadcastNestedLoopJoin" not in scale
-    assert "CartesianProduct" not in scale
-    assert "BroadcastExchange" in fast
+    assert "BroadcastExchange" in small
+    assert "BroadcastExchange" not in large
+    assert "BroadcastNestedLoopJoin" not in large
+    assert "CartesianProduct" not in large
 
 
 def test_candidate_joins_declare_explicit_parallelism(docs, embs):

@@ -110,7 +110,7 @@ def test_retry_rows(spark):
 def test_retry_after_maps_to_not_before_round(spark):
     """O5 extension (cfg.honor_retry_after): a 429 carrying a parsed
     Retry-After overrides the linear backoff with ceil(seconds /
-    round_seconds_estimate) rounds; rows without the header keep the
+    round_seconds) rounds; rows without the header keep the
     linear mapping, and with the flag OFF (reference-parity default)
     the header is ignored entirely."""
     from pyspark.sql import functions as F
@@ -124,7 +124,7 @@ def test_retry_after_maps_to_not_before_round(spark):
         F.when(F.col("url").endswith("/ra"), F.lit(150.0)),
     )
     cfg_on = CrawlConfig(max_retry=3, retry_backoff_rounds=1,
-                         honor_retry_after=True, round_seconds_estimate=60.0)
+                         honor_retry_after=True)
     rows = {r.url: r for r in backoff_retry_rows(f, round_no=5, cfg=cfg_on).collect()}
     # ceil(150/60)=3 rounds for the header row; linear 1 for the other
     assert rows["http://h.com/ra"].not_before_round == 5 + 1 + 3

@@ -359,7 +359,8 @@ def test_live_robots_crawl_equals_table_robots(
     transport (cfg.live_robots) and must match a table-side crawl given
     the equivalent pre-built robots table.  Hosts without a robots file
     404 -> allow-all; one host disallows its /img/ tree, another its
-    /p/ tree."""
+    /p/ tree, and a third asks for a 30 s Crawl-delay, which shrinks its
+    per-round budget through the scheduler's delays join."""
     import html as html_mod
 
     from pyspark.sql import Row
@@ -370,6 +371,7 @@ def test_live_robots_crawl_equals_table_robots(
         r.host for r in corpus["pages"].select("host").distinct().collect()
     )
     robots_rules = {hosts[0]: ["/img/"], hosts[1]: ["/p/"]}
+    crawl_delays = {hosts[2]: 30.0}
 
     edges: dict[str, list] = {}
     for r in corpus["links"].collect():
@@ -388,9 +390,12 @@ def test_live_robots_crawl_equals_table_robots(
                 + "".join(tags) + "</body></html>"
             ).encode("utf-8")
         rows[d["url"]] = d
-    for host, prefixes in robots_rules.items():
+    for host in (*robots_rules, *crawl_delays):
         body = ("User-agent: *\n"
-                + "".join(f"Disallow: {p}\n" for p in prefixes)).encode()
+                + "".join(f"Disallow: {p}\n"
+                          for p in robots_rules.get(host, []))
+                + (f"Crawl-delay: {crawl_delays[host]:g}\n"
+                   if host in crawl_delays else "")).encode()
         rows[f"http://{host}/robots.txt"] = {
             "url": f"http://{host}/robots.txt", "status": 200,
             "content_type": "text/plain", "bytes": body,
@@ -416,7 +421,8 @@ def test_live_robots_crawl_equals_table_robots(
 
         robots_df = spark.createDataFrame(
             [Row(host=h, disallow_prefixes=robots_rules.get(h, []),
-                 crawl_delay=None, sitemaps=[]) for h in hosts],
+                 crawl_delay=crawl_delays.get(h), sitemaps=[])
+             for h in hosts],
             schema=S.ROBOTS,
         )
         tcfg = CrawlConfig(**{**cfg.__dict__, "robots": True,
@@ -433,6 +439,10 @@ def test_live_robots_crawl_equals_table_robots(
                    for h, ps in robots_rules.items() for p in ps)
         }
         assert not blocked  # the gate actually gated
+        # the delay actually shrank its host's budget: floor(60 s / 30 s)
+        delayed = [r.scheduled for r in tjob.metrics.read().collect()
+                   if r.host == hosts[2]]
+        assert delayed and max(delayed) <= 2
         tf = {(r.url, r.round, r.status) for r in tjob.fetched.read().collect()}
         lf = {(r.url, r.round, r.status) for r in ljob.fetched.read().collect()}
         assert tf == lf

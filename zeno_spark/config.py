@@ -36,40 +36,6 @@ class CrawlConfig:
                                                # expands the fetched sitemap.
                                                # Exactly-once per host by the
                                                # uncovered-host fetch filter.
-    robots_broadcast_max_hosts: int = 1_000_000
-                                               # F10 join strategy: force-
-                                               # broadcast the robots cache into
-                                               # the gate/delay joins only while
-                                               # its host count (catalog row-
-                                               # count metadata, free) stays
-                                               # under this.  A years-long wide
-                                               # crawl accumulates 10^8 hosts of
-                                               # disallow arrays — tens of GB, a
-                                               # per-round broadcast that would
-                                               # kill executors; above the
-                                               # threshold the gate joins salted
-                                               # on (host, pmod(url_hash, salt))
-                                               # and the planner's own size
-                                               # estimate picks the strategy.
-                                               # 0 = never force broadcast
-    robots_salt_buckets: int = 4               # F10 scale-path salt, DEDICATED
-                                               # (smaller than host_salt_buckets
-                                               # on purpose): the salted robots
-                                               # join explodes the rules side —
-                                               # disallow arrays duplicated once
-                                               # per salt — so rules-side shuffle
-                                               # rows/bytes scale LINEARLY with
-                                               # this factor.  Cost bound: a
-                                               # 10^8-host cache at ~1 KB/host of
-                                               # rules shuffles ~100 GB x salt;
-                                               # 4 caps that at ~400 GB across
-                                               # the cluster (~400 MB/executor at
-                                               # 1000 executors) while still
-                                               # splitting a hot host's frontier
-                                               # rows 4 ways.  The politeness
-                                               # window's own salted phase (with
-                                               # the bigger host_salt_buckets)
-                                               # remains the primary skew kill.
 
     # retry / politeness (SURVEY §2.4)
     max_retry: int = 5                         # O5 (cmd/get.go:45)
@@ -82,8 +48,6 @@ class CrawlConfig:
                                                # Default OFF: reference parity
                                                # is strictly linear
                                                # (capture.go:84-114)
-    round_seconds_estimate: float = 60.0       # seconds-per-round used to map
-                                               # Retry-After seconds to rounds
     per_host_budget: int = 16                  # O4 (--max-concurrent-per-domain default,
                                                # cmd/get.go:53; enforced here, dead code there)
     host_salt_buckets: int = 1                 # >1 splits a hot host into salted
@@ -122,8 +86,9 @@ class CrawlConfig:
                                                # full-frontier edge aggregation is
                                                # the expensive part at scale)
     rank_priority_iters: int = 3               # PageRank iterations per recompute
-    round_seconds: float = 60.0                # wall-clock a round models for the
-                                               # Crawl-delay -> budget mapping (same
+    round_seconds: float = 60.0                # wall-clock a round models: maps a
+                                               # Crawl-delay to a per-round budget
+                                               # and a Retry-After to rounds (same
                                                # logical clock as streaming/live.py)
 
     # dedup

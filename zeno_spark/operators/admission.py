@@ -7,8 +7,8 @@ include/exclude), utils/url.go:105-127 (scheme), crawl/outlinks.go:77
 expressed natively so they push down below fetch (SURVEY §4 design rule).
 
 The robots gate (F10) is a north-rule ADDITION (the reference has no
-robots handling): broadcast-join the frontier against the small robots
-cache on host, drop rows whose URL path starts with a disallowed prefix.
+robots handling): left-join the frontier against the robots cache on
+(host, salt), drop rows whose URL path matches a disallow rule.
 """
 
 from __future__ import annotations
@@ -17,6 +17,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from zeno_spark.config import CrawlConfig
+
+# salt of the robots join key: a hot host's candidate rows spread over
+# this many join partitions when the planner shuffle-joins a large cache.
+# The rules side is exploded once per salt, so its rows and bytes grow
+# linearly with it.
+ROBOTS_SALT_BUCKETS = 4
 
 
 def scheme_ok(url: Column) -> Column:
@@ -90,12 +96,7 @@ def _robots_rule_matches(path, rule):
     ).otherwise(path.startswith(rule))
 
 
-def apply_robots_gate(
-    candidates: DataFrame,
-    robots: DataFrame,
-    broadcast: bool = True,
-    salt_buckets: int = 1,
-) -> DataFrame:
+def apply_robots_gate(candidates: DataFrame, robots: DataFrame) -> DataFrame:
     """F10 (addition): drop candidate URLs disallowed by the host's robots
     rules.  The rule match is a native `exists` over the rule array (no
     Python) — startswith for plain prefixes, RFC 9309 ``*``/``$``
@@ -109,53 +110,33 @@ def apply_robots_gate(
     host, the disallow sets UNIONED — both rule sets apply, the
     conservative direction.
 
-    Join strategy is the caller's scale decision (plans/crawl.py sizes
-    it from the catalog's free row-count metadata,
-    cfg.robots_broadcast_max_hosts):
-
-      * ``broadcast=True`` (default, the fast path while the cache fits
-        executor memory): force-broadcast the collapsed rules — zero
-        shuffle of the candidates.
-      * ``broadcast=False`` (the 10^8-host cache a years-long wide
-        crawl accumulates — tens of GB of disallow arrays, droppable
-        by no broadcast): leave the strategy to the planner's own size
-        estimate (it correctly refuses oversized builds), and SALT the
-        join key with ``pmod(url_hash, salt_buckets)`` — the rules side
-        explodes one row per (host, salt), still tiny relative to the
-        frontier, so a shuffle join spreads a hot host's candidate rows
-        across ``salt_buckets`` partitions instead of re-creating the
-        skew the politeness window's salted phase exists to kill.
-        COST BOUND: the explode duplicates each host's disallow array
-        once per salt, so rules-side shuffle bytes scale linearly with
-        ``salt_buckets`` — callers pass the dedicated (small)
-        cfg.robots_salt_buckets, not the politeness window's larger
-        host_salt_buckets (sizing analysis in config.py)."""
+    The join key is ``(host, pmod(xxhash64(url), ROBOTS_SALT_BUCKETS))``
+    against the rules exploded once per salt, and it carries no hint:
+    Spark's planner broadcasts a cache under
+    ``spark.sql.autoBroadcastJoinThreshold`` and shuffle-joins a larger
+    one, where the salt spreads a hot host's candidate rows over several
+    partitions instead of one."""
     rules = robots.groupBy(F.col("host").alias("r_host")).agg(
         F.array_distinct(
             F.flatten(F.collect_list("disallow_prefixes"))
         ).alias("r_disallow")
     )
+    salted = rules.select(
+        "r_host", "r_disallow",
+        F.explode(
+            F.sequence(F.lit(0), F.lit(ROBOTS_SALT_BUCKETS - 1))
+        ).alias("__r_salt"),
+    )
+    joined = candidates.join(
+        salted,
+        (candidates["host"] == salted["r_host"])
+        & (F.pmod(F.xxhash64("url"), F.lit(ROBOTS_SALT_BUCKETS)).cast("int")
+           == F.col("__r_salt")),
+        "left",
+    )
     path = F.regexp_replace(F.col("url"), r"^https?://[^/]*", "")
-    if broadcast:
-        joined = candidates.join(
-            F.broadcast(rules), candidates["host"] == rules["r_host"], "left"
-        )
-    else:
-        n = max(1, salt_buckets)
-        salted = rules.select(
-            "r_host", "r_disallow",
-            F.explode(F.sequence(F.lit(0), F.lit(n - 1))).alias("__r_salt"),
-        )
-        joined = candidates.join(
-            salted,
-            (candidates["host"] == salted["r_host"])
-            & (F.pmod(F.col("url_hash"), F.lit(n)).cast("int")
-               == F.col("__r_salt")),
-            "left",
-        )
     blocked = F.exists(
         F.coalesce(F.col("r_disallow"), F.array()),
         lambda p: _robots_rule_matches(path, p),
     )
-    out = joined.filter(~blocked).drop("r_host", "r_disallow")
-    return out.drop("__r_salt") if not broadcast else out
+    return joined.filter(~blocked).drop("r_host", "r_disallow", "__r_salt")

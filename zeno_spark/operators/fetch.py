@@ -93,11 +93,6 @@ FETCH_META = T.StructType(
     ]
 )
 
-# compatibility shape (fetch() wrapper): FETCH_META + payload bytes
-FETCH_RESULT = T.StructType(
-    FETCH_META.fields + [T.StructField("bytes", T.BinaryType(), True)]
-)
-
 # perceptual-hash agreement bound: measured lossy-codec roundtrip drift
 # is <= 2 bits of 64; corruption ~32 (see functions/images.py)
 _PHASH_TOLERANCE = 8
@@ -314,18 +309,6 @@ def attach_sink_payloads(sink_meta: DataFrame, pages: DataFrame) -> DataFrame:
         F.when(revisit | (F.col("status") != 200), F.lit(None).cast("binary"))
         .otherwise(F.col("__p_bytes")),
     ).drop("__p_url", "__p_bytes")
-
-
-def fetch(scheduled: DataFrame, pages: DataFrame, cfg=None) -> DataFrame:
-    """Compatibility wrapper: FETCH_META + payload bytes attached for
-    status-200 rows (one row per scheduled row, like the reference's
-    one response per request)."""
-    meta = fetch_meta(scheduled, pages, cfg)
-    ok = meta.filter(F.col("status") == 200)
-    rest = meta.filter(F.col("status") != 200).withColumn(
-        "bytes", F.lit(None).cast("binary")
-    )
-    return attach_sink_payloads(ok, pages).unionByName(rest)
 
 
 def split_results(results: DataFrame):

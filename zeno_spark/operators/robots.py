@@ -7,7 +7,8 @@ Two pieces:
     robots.txt bodies into the ``robots`` table (host,
     disallow_prefixes, crawl_delay), Arrow-batched;
   * the gate itself lives in operators/admission.py
-    (apply_robots_gate): broadcast-join on host + native array `exists`
+    (apply_robots_gate): a salted left join on host (the planner
+    broadcasts a small cache) + native array `exists`
     prefix match — the robots cache is tiny next to the frontier.
 
 Parser semantics (conservative subset of REP / RFC 9309):
@@ -224,9 +225,9 @@ def fetch_robots_live(hosts: DataFrame, transport) -> DataFrame:
         not permanently cache allow-all over the host's real rules.
 
     One transport batch per host partition and scheme; the result is
-    tiny (one row per host) and feeds apply_robots_gate's broadcast
-    join.  The first pass is materialized (localCheckpoint) before the
-    ok/miss split so the split never re-runs the wire fetch."""
+    one row per host and feeds apply_robots_gate's join.  The first
+    pass is materialized (localCheckpoint) before the ok/miss split so
+    the split never re-runs the wire fetch."""
     from pyspark.sql import functions as F
 
     first = transport.responses(_robots_fetch_rows(hosts, "http")).select(

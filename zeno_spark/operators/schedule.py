@@ -48,7 +48,6 @@ def politeness_schedule(
     delays: DataFrame | None = None,
     budgets: DataFrame | None = None,
     round_no: int | None = None,
-    broadcast_delays: bool = True,
 ) -> DataFrame:
     """Pick this round's fetch set: per-host FIFO top-`per_host_budget`.
 
@@ -65,10 +64,11 @@ def politeness_schedule(
     stride``, so consecutive fetch rounds sit >= stride apart and the
     modeled spacing respects d.  The reference has no delay enforcement
     at all (SURVEY §2.10); this is the F10-adjacent politeness tier the
-    robots column exists for.  Broadcast join — the delay side is one
-    row per host with a delay; duplicate hosts (e.g. a static robots
-    cache unioned with the live table) collapse to the LONGEST delay,
-    never to doubled frontier rows.
+    robots column exists for.  The join carries no hint (the planner
+    broadcasts a small cache) and its build side is one row per host
+    with a delay; duplicate hosts (e.g. a static robots cache unioned
+    with the live table) collapse to the LONGEST delay, never to doubled
+    frontier rows.
 
     ``budgets`` (optional) is a tiny (host, budget) frame of PER-HOST
     budget overrides — the AIMD adaptive-politeness recommendations
@@ -128,19 +128,14 @@ def politeness_schedule(
     if delays is not None:
         # longest delay wins on duplicate hosts (conservative), and the
         # build side stays one-row-per-host so the left join can never
-        # fan frontier rows out.  ``broadcast_delays=False`` is the
-        # 10^8-delay-host scale path (the caller sizes it from catalog
-        # row counts): the hint is dropped and the planner picks by its
-        # own size estimate — the join's left side is already the
-        # phase-1 survivors (<= budget*salt_buckets rows per host), so
-        # a shuffle join here is bounded and skew-free.
+        # fan frontier rows out.  No hint: the planner broadcasts a small
+        # cache, and a shuffle join of a large one is bounded because the
+        # left side is already the phase-1 survivors.
         d = (
             delays.filter(F.col("crawl_delay").isNotNull())
             .groupBy(F.col("host").alias("__d_host"))
             .agg(F.max("crawl_delay").alias("__delay"))
         )
-        if broadcast_delays:
-            d = F.broadcast(d)
         df = df.join(d, df["host"] == F.col("__d_host"), "left")
         if round_no is not None:
             # cross-round spacing for d > round_seconds: the per-round
@@ -193,7 +188,7 @@ def backoff_retry_rows(failed: DataFrame, round_no: int, cfg: CrawlConfig) -> Da
     ``cfg.honor_retry_after``: a 429 carrying a server Retry-After
     (parsed to seconds by the live transport, FETCH_META.retry_after)
     overrides the linear backoff with ceil(seconds /
-    cfg.round_seconds_estimate) rounds — OFF by default because the
+    cfg.round_seconds) rounds — OFF by default because the
     reference's backoff is strictly linear (capture.go:84-114) and
     matching it is the parity contract."""
     backoff = F.col("retry") * F.lit(cfg.retry_backoff_rounds)
@@ -203,7 +198,7 @@ def backoff_retry_rows(failed: DataFrame, round_no: int, cfg: CrawlConfig) -> Da
             F.greatest(
                 F.lit(1),
                 F.ceil(
-                    F.col("retry_after") / F.lit(cfg.round_seconds_estimate)
+                    F.col("retry_after") / F.lit(cfg.round_seconds)
                 ),
             ).cast("long"),
         ).otherwise(backoff)

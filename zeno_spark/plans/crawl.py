@@ -75,12 +75,6 @@ _TABLES = (
 SEEN_BUCKETS = 32
 
 
-def seed_lines(spark: SparkSession, path: str) -> DataFrame:
-    """S1 — see seed_lines_with_total; the DataFrame-only form."""
-    df, _ = seed_lines_with_total(spark, path)
-    return df
-
-
 def seed_lines_with_total(
     spark: SparkSession, path: str
 ) -> tuple[DataFrame, int]:
@@ -231,9 +225,6 @@ class CrawlJob:
             from ..operators.cdx import read_cdxj
 
             self.cdx_index = read_cdxj(spark, cfg.cdx_dedupe_dir)
-        # host count of the static cache, counted once on first gate use
-        # (the live table's count is free catalog metadata every round)
-        self._static_robots_rows: int | None = None
         self.state_dir = os.path.join(warehouse, "_crawl_state")
         os.makedirs(self.state_dir, exist_ok=True)
         # structured per-round log (internal/pkg/log/log.go + rotate.go
@@ -324,11 +315,13 @@ class CrawlJob:
         rows (item.go:76-80), dedupe (crawl.go:217-235), enqueue at hop 0.
         enqueue_seq = seed-file line order via the required `line`
         column (the batch analogue of append order).  File sources get
-        it natively from ``seed_lines`` — there is no RDD fallback."""
+        it natively from ``seed_lines_with_total`` — there is no RDD
+        fallback."""
         if "line" not in seed_urls_df.columns:
             raise ValueError(
                 "seed list needs a `line` column (FIFO enqueue order); "
-                "derive it with plans.crawl.seed_lines for a seed file"
+                "derive it with plans.crawl.seed_lines_with_total for a "
+                "seed file"
             )
         raw = seed_urls_df.select("url", F.col("line").cast("long"))
         parsed = (
@@ -364,13 +357,15 @@ class CrawlJob:
         # version 0): the exact anti-join against it is already cheap,
         # and a bloom index over it would only add Spark jobs
         new = dedup.dedupe_against_seen(items, self.seen.read()).cache()
-        n = new.count()  # materializes the cache (incl. first UDF worker
-        # spin-up) so the two appends below only re-scan it
-        self.frontier.append(new)
-        self.seen.append(
-            new.select("url_hash", "url", "type", F.lit(0).alias("round"))
-        )
-        new.unpersist()
+        try:
+            n = new.count()  # materializes the cache (incl. first UDF
+            # worker spin-up) so the two appends below only re-scan it
+            self.frontier.append(new)
+            self.seen.append(
+                new.select("url_hash", "url", "type", F.lit(0).alias("round"))
+            )
+        finally:
+            new.unpersist()
         self._write_marker("seeded.json", {"versions": self._versions(), "seeds": n})
         self._log("seeded", urls=n)
         return n
@@ -563,6 +558,22 @@ class CrawlJob:
         merged.unpersist()
 
     def run_round(self, round_no: int) -> RoundStats:
+        """One round, gate to round marker.  The round's cached
+        intermediates are released whether it commits or raises, so an
+        in-process retry of a failed round does not pile up caches."""
+        cached: list[DataFrame] = []
+
+        def cache(df: DataFrame) -> DataFrame:
+            cached.append(df)
+            return df.cache()
+
+        try:
+            return self._round(round_no, cache)
+        finally:
+            for df in cached:
+                df.unpersist()
+
+    def _round(self, round_no: int, cache) -> RoundStats:
         cfg = self.cfg
         timer = StageTimer()
         self._log("round_start", round=round_no)
@@ -578,32 +589,14 @@ class CrawlJob:
             # candidate set below (dedup/admission like any discovery).
             with timer.stage("robots"):
                 sitemap_cand = self._refresh_robots(gated, round_no)
-        robots_cache = self._effective_robots()
-        # join-strategy decision for every robots-cache consumer this
-        # round: force-broadcast only while the cache's host count
-        # (catalog row-count metadata + a once-memoized static count)
-        # fits cfg.robots_broadcast_max_hosts — a wide crawl's cache
-        # grows with every host ever seen, and a 10^8-host broadcast
-        # of disallow arrays is a per-round executor OOM, not a plan.
-        # Strict `> 0` honors the documented `0 = never force broadcast`
-        # sentinel, and the decision (plus its one-time memoized static
-        # count job) only runs when a robots consumer exists this round.
-        robots_bcast = True
-        if cfg.robots and robots_cache is not None:
-            robots_bcast = (
-                cfg.robots_broadcast_max_hosts > 0
-                and self._robots_host_rows() <= cfg.robots_broadcast_max_hosts
-            )
-            gated = apply_robots_gate(
-                gated, robots_cache,
-                broadcast=robots_bcast,
-                salt_buckets=max(1, cfg.robots_salt_buckets),
-            )
-        delays = robots_cache if cfg.robots else None
-        sched = politeness_schedule(
-            gated, cfg, delays=delays, budgets=self._adaptive_budgets(),
-            round_no=round_no, broadcast_delays=robots_bcast,
-        ).cache()
+        robots_cache = self._effective_robots() if cfg.robots else None
+        if robots_cache is not None:
+            gated = apply_robots_gate(gated, robots_cache)
+        sched = cache(politeness_schedule(
+            gated, cfg, delays=robots_cache,
+            budgets=self._adaptive_budgets(),
+            round_no=round_no,
+        ))
 
         # NARROW fetch result (no payload bytes) — the ONLY cacheable
         # round intermediate.  Payload bytes never enter a cache (the
@@ -611,7 +604,9 @@ class CrawlJob:
         # stats + a dictionary attempt per BINARY cell — measured:
         # minutes of pure CPU on a GB-scale corpus, anti-scaling with
         # task slots), never shuffle, and never round-trip Python.
-        results = fetch_meta(sched, self.pages, cfg, transport=self.transport).cache()
+        results = cache(
+            fetch_meta(sched, self.pages, cfg, transport=self.transport)
+        )
         # Materialize NOW, in one clean job, before any action whose
         # plan broadcasts a subtree of it: Spark launches broadcast-
         # exchange jobs concurrently ahead of the main query, and on a
@@ -671,15 +666,15 @@ class CrawlJob:
             # robots-discovered sitemap URLs enter the SAME dedup +
             # frontier path as every other candidate
             cand = cand.unionByName(sitemap_cand)
-        cand = cand.cache()
+        cand = cache(cand)
 
         in_batch = dedup.in_batch_dedupe(cand)
-        new = self._rank_boost(
+        new = cache(self._rank_boost(
             dedup.dedupe_against_seen(
                 in_batch, self.seen.read(), use_bloom=cfg.bloom_prefilter,
                 bloom_index=self._bloom_index(),
             )
-        ).cache()
+        ))
 
         frontier_cols = [f.name for f in schemas.FRONTIER.fields]
         retries = backoff_retry_rows(retryable, round_no, cfg).select(*frontier_cols)
@@ -722,7 +717,7 @@ class CrawlJob:
             F.col("revisit") if "revisit" in sink_src.columns else F.lit(False)
         )
         psize = F.coalesce(F.col("payload_size"), F.lit(0))
-        metric_rows = (
+        metric_rows = cache(
             _contrib(
                 results,
                 scheduled=one, fetched_ok=is_ok.cast("long"),
@@ -744,7 +739,7 @@ class CrawlJob:
                 "host",
                 *[F.col(k).cast("long").alias(k) for k in kinds],
             )
-        ).cache()
+        )
 
         # ---- round commits (atomic marker last) ----
         # results.count() above already filled the sched+results caches;
@@ -813,12 +808,6 @@ class CrawlJob:
         )
         self._commit_round(round_no, stats)
         self._log("round_end", **stats.__dict__, **timer.timings)
-
-        sched.unpersist()
-        results.unpersist()
-        cand.unpersist()
-        new.unpersist()
-        metric_rows.unpersist()
         return stats
 
     def write_metadata_records(
@@ -842,17 +831,6 @@ class CrawlJob:
         )
         return self.metadata.append(rows)
 
-    def _robots_host_rows(self) -> int:
-        """Host count of the effective robots cache, for the gate's
-        broadcast-vs-shuffle decision: the live table's count is free
-        manifest metadata; the static cache (tiny by construction — a
-        user-supplied table) is counted once and memoized."""
-        if self._static_robots_rows is None:
-            self._static_robots_rows = (
-                self.robots.count() if self.robots is not None else 0
-            )
-        return self._static_robots_rows + self.robots_tbl.row_count()
-
     def _effective_robots(self) -> DataFrame | None:
         """The gate's input: the user-supplied static cache (if any)
         union the persisted live-fetched table.  The table read is a
@@ -875,9 +853,8 @@ class CrawlJob:
         cache doesn't cover yet, and APPEND them to the robots table
         (round-marker commit scope: a crash rolls the fetch back with
         the round; a resume reads the committed rows instead of
-        re-fetching).  The cache is one tiny row per host (it feeds a
-        broadcast join), so the per-round cost is one bounded transport
-        batch — and zero fetch jobs on rounds that introduce no new
+        re-fetching).  The cache is one row per host, so the per-round
+        cost is one bounded transport batch — and zero fetch jobs on rounds that introduce no new
         host.
 
         Returns hop-0 seed candidates for any ``Sitemap:`` directives
